@@ -228,11 +228,7 @@ object Bench {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // cpus is free-form env text ("*" is a legal local[] arg): emit it as
-    // a bare JSON number only when it actually is one
-    val cpusJson =
-      if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus
-      else "\"" + cpus + "\""
+    val cpusJson = Bench.cpusJson(cpus)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -546,13 +542,10 @@ object Bench {
   private def miniJson(metric: String, total: Double, sfDir: String,
       cpus: String, contended: Boolean, results: Seq[(String, Double)],
       detailPath: String): String = {
-    val cpusJson =
-      if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus
-      else "\"" + cpus + "\""
     def line(top: Seq[(String, Double)]): String = {
       val qj = top.map { case (k, v) => "\"" + k + f"\":$v%.2f" }
         .mkString("{", ",", "}")
-      f"""{"metric":"$metric","value":$total%.3f,"unit":"sec","sf":"$sfDir","cpus":$cpusJson,"n_queries":${results.size},"contended":$contended,"detail":"$detailPath","queries_truncated":true,"queries":$qj}"""
+      f"""{"metric":"$metric","value":$total%.3f,"unit":"sec","sf":"$sfDir","cpus":${cpusJson(cpus)},"n_queries":${results.size},"contended":$contended,"detail":"$detailPath","queries_truncated":true,"queries":$qj}"""
     }
     val ranked = results.filter(_._2 >= 0).sortBy(-_._2)
     var n = ranked.size
@@ -560,10 +553,25 @@ object Bench {
     line(ranked.take(n))
   }
 
-  /** `/x/BENCH_DETAIL.json` → `/x/BENCH_DETAIL_c32.json` for cpus=32. */
-  private def cpusKeyedPath(path: String, cpus: String): String = {
+  /** `cpus` as a JSON value: it is free-form env text ("*" is a legal
+    * local[] arg), so a bare number only when it is one in JSON's own
+    * grammar (ASCII digits, no leading zero), else an escaped string. */
+  private[graft] def cpusJson(cpus: String): String =
+    if (cpus.matches("0|[1-9][0-9]*")) cpus
+    else "\"" + cpus.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+
+  /** `/x/BENCH_DETAIL.json` → `/x/BENCH_DETAIL_c32.json` for cpus=32; the
+    * extension is looked for in the file name only, so `/x.d/BENCH` →
+    * `/x.d/BENCH_c32`. */
+  private[graft] def cpusKeyedPath(path: String, cpus: String): String = {
     val i = path.lastIndexOf('.')
-    if (i < 0) s"${path}_c$cpus" else s"${path.substring(0, i)}_c$cpus${path.substring(i)}"
+    if (i <= path.lastIndexOf('/') + 1) s"${path}_c$cpus"
+    else s"${path.substring(0, i)}_c$cpus${path.substring(i)}"
   }
 
   private def writeArtifact(path: String, line: String): Unit =

@@ -3,7 +3,7 @@ package graft
 /** Shared DuckDB oracle fragments.
   *
   * Percentiles: several linear-interpolation formulas circulate and they
-  * differ at the last ULP (see functions/NpPercentile for the numpy
+  * differ at the last ULP (see functions/NpElapsedStats for the numpy
   * story). What matters for the DuckDB-hash oracles is the pair
   * actually being compared:
   *
@@ -25,7 +25,7 @@ package graft
   * 105). A formula that merely agrees on small data is not an oracle;
   * these fragments replay Spark's arithmetic verbatim, one IEEE op at
   * a time. (numpy's `a + (b−a)·t` branch family is a THIRD arithmetic —
-  * it belongs only in NpPercentile's reference-parity outputs, never in
+  * it belongs only in NpElapsedStats' reference-parity outputs, never in
   * a builtin-percentile oracle.)
   */
 object OracleSql {

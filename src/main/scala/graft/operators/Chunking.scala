@@ -243,7 +243,9 @@ object Chunking {
     // tokenize passes). So the occurrence count is folded into the list
     // (cnt == size(starts)) and the removal branch anchors `starts`
     // with a provably-true filter (a group gathers >= 1 start), which
-    // blocks the pruner without changing a row.
+    // blocks the pruner without changing a row. Pinned by the ScaleSpec
+    // test "q87/q167/q77 one-pass pre-counts: the tokenize exchange is
+    // shared": if the anchor stops working, that plan test fails.
     val pre = blocks
       .groupBy(col(idCol), col("block"))
       .agg(collect_list(col("start")).as("starts"))

@@ -12,11 +12,14 @@ import org.apache.spark.sql.types._
   *   (P4-P6) → hash aggregate A1-A6 (partial+final around an Exchange on the
   *   group key) → py_round 2dp (P11, CPython-identical half-even) → sort (O1).
   *
-  * Scale notes: the only non-streaming aggregate is the exact percentile
-  * (`Percentile`, ObjectHashAggregate — buffers values per group, same cost
-  * shape as the reference's per-group `elapsed` list, calcular_kpi.py:15,24).
-  * At 100 TB cardinality switch `exactP90 = false` for `approx_percentile`
-  * with bounded error; everything else is a streaming partial agg.
+  * Scale notes: the only non-streaming aggregate is the per-group value
+  * buffer the exact p90 (and, in the faithful tier, numpy's scan-order
+  * mean) needs — the same cost shape as the reference's per-group
+  * `elapsed` lists (calcular_kpi.py:15,24). The faithful tier keeps it
+  * primitive ([[graft.functions.NpElapsedStats]]: ~20 bytes per value,
+  * file paths once per split); the crossEngineExact tier uses Spark's
+  * builtin `percentile` (a value → count map). Everything else is a
+  * streaming partial agg.
   */
 object Kpi {
 
@@ -73,15 +76,16 @@ object Kpi {
     * parse_result). Exact p90 is linear interpolation at position
     * (n−1)·0.9, but WHICH lerp depends on the mode, because the two
     * ground truths differ at the last ULP (see
-    * [[graft.functions.NpPercentile]]): np.percentile (the reference,
-    * calcular_kpi.py:39-44) branches its formula at t ≥ 0.5, while
-    * Spark's builtin `Percentile` and DuckDB's `quantile_cont` share the
-    * two-product form — and a 1-ULP difference flips `py_round` exactly
+    * [[graft.functions.NpElapsedStats.npPercentile]]): np.percentile (the
+    * reference, calcular_kpi.py:39-44) branches its formula at t ≥ 0.5,
+    * while Spark's builtin `Percentile` and DuckDB's `quantile_cont` share
+    * a two-product form — and a 1-ULP difference flips `py_round` exactly
     * on 2-decimal midpoints (caught live by the parity gate).
     *
     * Two output modes:
-    *  - faithful (default): reference contract — plain double avg, p90
-    *    replayed with numpy's exact lerp, both metrics rounded to 2 dp
+    *  - faithful (default): reference contract — avg and p90 replay
+    *    np.mean / np.percentile bit for bit from one primitive per-group
+    *    buffer ([[graft.functions.NpElapsedStats]]), both rounded to 2 dp
     *    with CPython's exact-binary half-even (`py_round`, P11).
     *  - crossEngineExact: no rounding; avg is computed from an exact
     *    DECIMAL(18,2) sum (elapsed values are 2-dp by contract) divided in
@@ -91,102 +95,55 @@ object Kpi {
     *    (DuckDB's round_even on DOUBLE misrounds near ties, and double sums
     *    are order-dependent, so rounded outputs can NOT be made portable.)
     */
-  def aggregate(
-      normalized: DataFrame,
-      exactP90: Boolean = true,
-      crossEngineExact: Boolean = false): DataFrame = {
-    // (aggregate expression, post-aggregation transform) — the faithful
-    // tier buffers the group's values IN SCAN ORDER (the reference's
-    // per-group elapsed lists) and both final aggregates replay numpy on
-    // that buffer after the agg: p90 sorts then `_lerp`-interpolates,
-    // avg replays np.mean's pairwise summation.
-    //
-    // SCAN ORDER is enforced, not assumed (ADVICE r13): collect_list
-    // concatenates partial buffers in shuffle-FETCH order, which is
-    // nondeterministic once the input splits — and np.mean's pairwise
-    // sum is order-dependent at the ulp, exactly what decides py_round
-    // on a 2-dp-midpoint cent. Each row therefore carries a stable
-    // file-order key `(input_file_name, input_file_block_start,
-    // monotonically_increasing_id)`: within one scan partition mono-id
-    // ascends in scan order, across partitions (file, block_start)
-    // reconstructs file order regardless of Spark's size-descending
-    // split packing, and for non-file inputs (specs) name=""/start=-1
-    // degrade the key to mono-id = original partition order. Sorting
-    // the buffer by that key replays the reference's sequential-reader
-    // order deterministically. Cost: faithful tier only (the
-    // crossEngineExact and approx tiers have no buffer), one struct
-    // per buffered value plus an in-memory per-group sort the p90
-    // already pays anyway.
-    val faithful = exactP90 && !crossEngineExact
-    // flat struct, key fields FIRST: sort_array orders structs
-    // lexicographically by field position, so (f, b, i, v) sorts by the
-    // scan key with the value along for the ride
-    val scanKv = struct(
-      input_file_name().as("f"), input_file_block_start().as("b"),
-      monotonically_increasing_id().as("i"), col("elapsed_ms").as("v"))
-    val valueOf: Column => Column = x => x.getField("v")
-    val (p90Agg, p90Post): (Column, Column => Column) =
-      if (!exactP90)
-        (percentile_approx(col("elapsed_ms"), lit(0.9), lit(10000)), identity)
-      else if (crossEngineExact)
-        (percentile(col("elapsed_ms"), lit(0.9)), identity)
+  def aggregate(normalized: DataFrame, crossEngineExact: Boolean = false): DataFrame = {
+    // Faithful tier: np.mean is pairwise summation over the group's values
+    // IN SCAN ORDER, and that order is enforced, not assumed (ADVICE r13):
+    // partial buffers merge in shuffle-FETCH order, nondeterministic once
+    // the input splits, and the one-ulp accumulation error decides the
+    // printed cent when the true mean lands on a 2-dp midpoint (round-13
+    // parity catch: exact 373.045, np.mean 373.04499999999996 → 373.04).
+    // Each row therefore carries the file-order key (input_file_name,
+    // input_file_block_start, monotonically_increasing_id), which the
+    // aggregate sorts by before summing (NpElapsedStats scaladoc). The
+    // key is nondeterministic-flagged, so it is materialized in a Project
+    // BEFORE the aggregate (Catalyst rejects it inside agg arguments).
+    // A plain double avg() is wrong for BOTH tiers: naive left-fold error
+    // plus partition-order nondeterminism (round-5 parity catch, 359.705…).
+    val (input, latencyAggs, avg, p90) =
+      if (crossEngineExact)
+        // exact DECIMAL(18,2) sum divided once in double — the correctly-
+        // rounded true mean, which DuckDB replays for the hash-portable
+        // oracle gate; unrounded, bit-stable doubles
+        (normalized,
+          Seq((sum(col("elapsed_ms").cast("decimal(18,2)")).cast("double") /
+            count(lit(1))).as("avg_raw"),
+            percentile(col("elapsed_ms"), lit(0.9)).as("p90_raw")),
+          col("avg_raw"), col("p90_raw"))
       else
-        (collect_list(col("_scan_kv")),
-          c => graft.functions.NpPercentile.ofSorted(
-            sort_array(transform(c, valueOf)), 0.9))
-    // Mean tiers. crossEngineExact: exact DECIMAL(18,2) sum (elapsed is
-    // 2-dp by contract) divided once in double — the correctly-rounded
-    // true mean, which DuckDB replays for the hash-portable oracle gate.
-    // Faithful tier: np.mean's pairwise summation over the same scan-
-    // order buffer the p90 uses (NpMeanExpression) — numpy's sum is
-    // usually the correctly-rounded value too, but NOT always, and when
-    // a group's true mean lands exactly on a 2-dp midpoint the one-ulp
-    // accumulation error decides the printed cent (caught live by the
-    // parity gate, round 13: exact mean 373.045, np.mean
-    // 373.04499999999996 → ref 373.04, exact-sum path 373.05). A plain
-    // double avg() is wrong for BOTH tiers: naive left-fold error plus
-    // partition-order nondeterminism (round-5 parity catch, 359.705…).
-    // The faithful tier's avg aggregates the SAME collect_list expression
-    // as the p90 — Catalyst dedups identical aggregate expressions, so
-    // there is ONE physical buffer per group feeding both replays: the
-    // p90 sorts it by VALUE, the avg by the scan-order key. The
-    // approx tier (the 100 TB cardinality switch) has no buffer and is
-    // not parity-gated: it keeps the exact-decimal mean.
-    val (avgAgg, avgPost): (Column, Column => Column) =
-      if (faithful)
-        (collect_list(col("_scan_kv")),
-          c => graft.functions.NpMeanExpression.npMean(
-            transform(sort_array(c), valueOf)))
-      else
-        (sum(col("elapsed_ms").cast("decimal(18,2)")).cast("double") /
-          count(lit(1)), identity)
-    // py_round, not bround: Python rounds the exact binary double, bround
-    // rounds its shortest decimal repr — they disagree on values like
-    // 696.515 (see PyRoundExpression scaladoc; caught by the parity gate)
-    val round2: Column => Column =
-      if (crossEngineExact) identity
-      else (c => graft.functions.PyRoundExpression.pyRound(c, 2))
-    // mono-id is nondeterministic-flagged, so the key is materialized in
-    // a Project BEFORE the aggregate (Catalyst rejects it inside agg
-    // arguments); the extra column exists only in the faithful tier
-    val input =
-      if (faithful) normalized.withColumn("_scan_kv", scanKv) else normalized
+        // py_round, not bround: Python rounds the exact binary double,
+        // bround rounds its shortest decimal repr — they disagree on values
+        // like 696.515 (see PyRoundExpression scaladoc; caught by the
+        // parity gate)
+        (normalized.select(col("*"), input_file_name().as("_scan_f"),
+          input_file_block_start().as("_scan_b"),
+          monotonically_increasing_id().as("_scan_i")),
+          Seq(graft.functions.NpElapsedStats.npElapsedStats(col("elapsed_ms"),
+            col("_scan_f"), col("_scan_b"), col("_scan_i")).as("latency")),
+          graft.functions.PyRoundExpression.pyRound(col("latency.mean"), 2),
+          graft.functions.PyRoundExpression.pyRound(col("latency.p90"), 2))
+    val counts = Seq(
+      count(lit(1)).as("requests_total"),
+      count_if(col("status_code").between(200, 299)).as("success_2xx"),
+      count_if(col("status_code").between(400, 499)).as("client_4xx"),
+      count_if(col("status_code").between(500, 599)).as("server_5xx"),
+      count_if(col("parse_result") =!= "ok").as("parse_errors"))
     input
       .groupBy(col("date_utc"), col("endpoint_base"))
-      .agg(
-        count(lit(1)).as("requests_total"),
-        count_if(col("status_code").between(200, 299)).as("success_2xx"),
-        count_if(col("status_code").between(400, 499)).as("client_4xx"),
-        count_if(col("status_code").between(500, 599)).as("server_5xx"),
-        count_if(col("parse_result") =!= "ok").as("parse_errors"),
-        avgAgg.as("avg_raw"),
-        p90Agg.as("p90_raw"))
+      .agg(counts.head, counts.tail ++ latencyAggs: _*)
       .select(
         col("date_utc"), col("endpoint_base"), col("requests_total"),
         col("success_2xx"), col("client_4xx"), col("server_5xx"),
-        col("parse_errors"),
-        round2(avgPost(col("avg_raw"))).as("avg_elapsed_ms"),
-        round2(p90Post(col("p90_raw"))).as("p90_elapsed_ms"))
+        col("parse_errors"), avg.as("avg_elapsed_ms"), p90.as("p90_elapsed_ms"))
       .orderBy(col("date_utc"), col("endpoint_base"))
   }
 

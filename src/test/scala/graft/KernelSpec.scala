@@ -351,7 +351,7 @@ class KernelSpec extends AnyFunSuite {
   }
 
   test("np_mean replays numpy pairwise summation bit-exactly") {
-    import graft.functions.NpMeanExpression
+    import graft.functions.NpElapsedStats.npMean
     // expectations computed by numpy 1.26 (float(np.mean(...))) on
     // deterministic vectors crossing every boundary of the algorithm:
     // n<8 naive fold, n<=128 8-way unroll, >128 pairwise recursion,
@@ -364,17 +364,14 @@ class KernelSpec extends AnyFunSuite {
       128 -> 503.7975, 129 -> 504.59038759689923,
       8192 -> 500.10265625, 8193 -> 500.13793238130114, 20000 -> 499.945)
     for ((n, want) <- expect) {
-      val got = Seq(vec(n)).toDF("v")
-        .select(NpMeanExpression.npMean(col("v"))).head().getDouble(0)
+      val got = npMean(vec(n).toArray, n)
       assert(got == want, s"n=$n: np_mean $got != numpy $want")
     }
     // the live round-13 parity catch: a 64-value group whose EXACT mean
     // is the 2-dp midpoint 373.045 — numpy's pairwise sum reads a hair
     // below it and the reference prints 373.04; the exact-decimal mean
     // would print 373.05. np_mean must land on numpy's side.
-    val empty = Seq(Seq.empty[Double]).toDF("v")
-      .select(NpMeanExpression.npMean(col("v"))).head().getDouble(0)
-    assert(empty == 0.0) // the reference's empty-group guard
+    assert(npMean(Array.empty[Double], 0) == 0.0) // the reference's empty-group guard
   }
 
   test("q10 cents arithmetic stays decimal-exact past 2^53") {

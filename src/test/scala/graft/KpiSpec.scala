@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{Kpi, Normalize}
@@ -94,15 +95,14 @@ class KpiSpec extends AnyFunSuite {
   }
 
   test("A6 faithful p90 replays numpy's _lerp at ULP level (both branches)") {
-    import graft.functions.NpPercentile
+    import graft.functions.NpElapsedStats.npPercentile
+    def p90(v: Seq[Double]): Double = npPercentile(v.sorted.toArray, v.size, 0.9)
     // the live parity-gate catch: lo=746.21, hi=746.66 at t=0.1 —
     // numpy's a+(b-a)t gives 746.25499…994 (rounds to 746.25), the
     // two-product (1-t)a+tb of builtin percentile / quantile_cont gives
     // 746.25500…001 (rounds to 746.26)
     // n=100 → virtual index 89.1: v[89]=746.21, v[90]=746.66 (0-based)
-    val low = Seq(Seq.fill(89)(1.0) ++ Seq(746.21, 746.66) ++ Seq.fill(9)(999.0))
-      .toDF("v").select(NpPercentile.ofSorted(sort_array($"v"), 0.9))
-      .as[Double].collect().head
+    val low = p90(Seq.fill(89)(1.0) ++ Seq(746.21, 746.66) ++ Seq.fill(9)(999.0))
     assert(low == 746.21 + (746.66 - 746.21) * ((100 - 1) * 0.9 - 89.0),
       s"got $low")
     assert(graft.functions.PyRoundExpression.round(low, 2) == 746.25)
@@ -111,18 +111,12 @@ class KpiSpec extends AnyFunSuite {
     val twoProduct = 746.21 * (1 - 0.1) + 746.66 * 0.1
     assert(graft.functions.PyRoundExpression.round(twoProduct, 2) == 746.26)
     // t >= 0.5 branch: numpy switches to b-(b-a)(1-t); n=5,p=0.9 → t=0.6
-    val hi = Seq(Seq(1.0, 2.0, 3.0, 10.0, 746.66))
-      .toDF("v").select(NpPercentile.ofSorted(sort_array($"v"), 0.9))
-      .as[Double].collect().head
+    val hi = p90(Seq(1.0, 2.0, 3.0, 10.0, 746.66))
     assert(hi == 746.66 - (746.66 - 10.0) * (1.0 - ((5 - 1) * 0.9 - 3.0)),
       s"got $hi")
     // degenerate sizes: n=1 → the value; empty → the reference's 0.0 guard
-    val one = Seq(Seq(42.5)).toDF("v")
-      .select(NpPercentile.ofSorted($"v", 0.9)).as[Double].collect().head
-    assert(one == 42.5)
-    val empty = Seq(Seq.empty[Double]).toDF("v")
-      .select(NpPercentile.ofSorted($"v", 0.9)).as[Double].collect().head
-    assert(empty == 0.0)
+    assert(p90(Seq(42.5)) == 42.5)
+    assert(p90(Seq.empty) == 0.0)
   }
 
   test("P11 half-even rounding (reference: round(0.125,2)==0.12)") {
@@ -227,5 +221,166 @@ class KpiSpec extends AnyFunSuite {
     // sequential sum is 4.0 → mean 4/3 → rounds to 1.33
     assert(oneKpi.exists(_.contains("1.33")),
       s"fixture lost its order sensitivity: $oneKpi")
+  }
+
+  /** The faithful tier as formulated before its primitive buffer: one
+    * `collect_list(struct(file, block_start, mono-id, value))` per group,
+    * `sort_array`-ed by the scan key for np.mean and by value for numpy's
+    * `_lerp` as Column arithmetic. Reference for the equivalence pins. */
+  private def referenceKpi(normalized: DataFrame): DataFrame = {
+    val npMean = udf((v: Seq[Double]) =>
+      graft.functions.NpElapsedStats.npMean(v.toArray, v.size))
+    def lerp(sorted: Column): Column = {
+      val n = size(sorted)
+      val pos = (n - lit(1)).cast("double") * lit(0.9)
+      val i = floor(pos).cast("int")
+      val t = pos - floor(pos)
+      val a = element_at(sorted, i + lit(1))
+      val b = element_at(sorted, least(i + lit(2), n))
+      when(n === 0, lit(0.0))
+        .when(t >= 0.5, b - (b - a) * (lit(1.0) - t))
+        .otherwise(a + (b - a) * t)
+    }
+    val valueOf: Column => Column = _.getField("v")
+    val round2: Column => Column = graft.functions.PyRoundExpression.pyRound(_, 2)
+    normalized
+      .withColumn("_scan_kv", struct(
+        input_file_name().as("f"), input_file_block_start().as("b"),
+        monotonically_increasing_id().as("i"), col("elapsed_ms").as("v")))
+      .groupBy(col("date_utc"), col("endpoint_base"))
+      .agg(
+        count(lit(1)).as("requests_total"),
+        count_if(col("status_code").between(200, 299)).as("success_2xx"),
+        count_if(col("status_code").between(400, 499)).as("client_4xx"),
+        count_if(col("status_code").between(500, 599)).as("server_5xx"),
+        count_if(col("parse_result") =!= "ok").as("parse_errors"),
+        collect_list(col("_scan_kv")).as("kv"))
+      .select(
+        col("date_utc"), col("endpoint_base"), col("requests_total"),
+        col("success_2xx"), col("client_4xx"), col("server_5xx"),
+        col("parse_errors"),
+        round2(npMean(transform(sort_array(col("kv")), valueOf))).as("avg_elapsed_ms"),
+        round2(lerp(sort_array(transform(col("kv"), valueOf)))).as("p90_elapsed_ms"))
+      .orderBy(col("date_utc"), col("endpoint_base"))
+  }
+
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val prior = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Cell-identical KPI rows from the faithful aggregate and
+    * [[referenceKpi]] over the same bitácora; returns the rows. */
+  private def assertMatchesReference(raw: => DataFrame): Seq[Row] = {
+    val got = Kpi.bitacoraKpi(raw).collect().toSeq
+    val want = referenceKpi(Kpi.normalized(raw)).collect().toSeq
+    assert(got.map(_.toString) == want.map(_.toString),
+      s"\n got=${got.take(5)}\nwant=${want.take(5)}")
+    got
+  }
+
+  private def jsonl(elapsed: Seq[String], endpoint: Int => String): String =
+    elapsed.zipWithIndex.map { case (e, k) =>
+      s"""{"timestamp_utc": "2026-08-1${k % 2}T00:00:00Z", "endpoint": "${endpoint(k)}", """ +
+        s""""status_code": ${200 + 100 * (k % 4)}, "elapsed_ms": $e, "parse_result": "ok"}"""
+    }.mkString("", "\n", "\n")
+
+  /** 2-dp latencies with a sprinkle of ±1e17s (ulp 16), so each group's
+    * float mean depends on the order its values are summed in. */
+  private def orderSensitive(n: Int, salt: Long): Seq[String] =
+    (0 until n).map { k =>
+      if (k % 13 == 7) (if (k % 2 == 0) "1.0e17" else "-1.0e17")
+      else (((k * 7919L + salt) % 100000L) / 100.0).toString
+    }
+
+  test("faithful aggregate equals the collect_list reference: in-memory " +
+      "input, one-value groups, NaN and ±Infinity") {
+    val special = Seq("NaN", "Infinity", "-Infinity", "1.5", "2.25", "-0.0", "0.0")
+    val rows =
+      // one-value groups, one per endpoint
+      (0 until 20).map(k => ("2026-08-11T00:00:00Z", s"/one$k", "200", s"$k.25", "ok")) ++
+      // NaN / ±Infinity mixed into multi-value groups
+      (0 until 60).map(k => ("2026-08-11T00:00:00Z", s"/special${k % 3}",
+        "500", special(k % special.size), "ok")) ++
+      // an only-infinite group (Inf - Inf in the lerp), and one infinity
+      // of each sign among finite values
+      Seq("Infinity", "-Infinity", "Infinity").map(
+        e => ("2026-08-12T00:00:00Z", "/inf", "200", e, "ok")) ++
+      Seq("+", "-").flatMap(sign => (1 to 10).map(k =>
+        ("2026-08-12T00:00:00Z", s"/inf$sign", "200",
+          if (k == 10) s"${sign}Infinity" else s"$k.5", "ok"))) ++
+      orderSensitive(3000, 3).zipWithIndex.map { case (e, k) =>
+        ("2026-08-12T00:00:00Z", s"/mem${k % 3}", "404", e, "ok") }
+    val got = assertMatchesReference(bitacora(rows)).map(_.toString)
+    assert(got.exists(_.contains("NaN")) && got.exists(_.contains("Infinity")),
+      s"fixture lost its special values: $got")
+  }
+
+  test("faithful aggregate equals the collect_list reference under the " +
+      "sort-based fallback, many groups") {
+    object Plans extends AdaptiveSparkPlanHelper
+    val raw = spark.range(0, 40000, 1, 6).select(
+      concat(lit("2026-08-1"), (col("id") % 3).cast("string"), lit("T00:00:00Z"))
+        .as("timestamp_utc"),
+      concat(lit("/e"), (col("id") % 400).cast("string")).as("endpoint"),
+      lit("200").as("status_code"),
+      when(col("id") % 13 === 7, lit("1.0e17"))
+        .otherwise(((col("id") * 7919) % 100000 / 100).cast("string")).as("elapsed_ms"),
+      lit("ok").as("parse_result"))
+    withConf("spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "1") {
+      assertMatchesReference(raw)
+      val kpi = Kpi.bitacoraKpi(raw)
+      kpi.collect()
+      val fellBack = Plans.collect(kpi.queryExecution.executedPlan) {
+        case p => p.metrics.get("numTasksFallBacked").map(_.value).getOrElse(0L)
+      }.sum
+      assert(fellBack > 0, "the sort-based fallback never engaged")
+    }
+  }
+
+  test("faithful aggregate equals the collect_list reference: one file " +
+      "split into many blocks, groups past numpy's 8192-value block") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_blocks")
+    java.nio.file.Files.writeString(dir.resolve("all.jsonl"),
+      jsonl(orderSensitive(40000, 11), k => if (k % 8 == 0) "/small" else "/big"))
+    def read = Kpi.readBitacora(spark, dir.toString)
+    val oneBlock = withConf("spark.sql.files.openCostInBytes" -> "1073741824") {
+      assert(read.rdd.getNumPartitions == 1)
+      Kpi.bitacoraKpi(read).collect().toSeq
+    }
+    withConf("spark.sql.files.maxPartitionBytes" -> "65536",
+        "spark.sql.files.openCostInBytes" -> "0") {
+      assert(read.rdd.getNumPartitions > 20)
+      assert(assertMatchesReference(read).map(_.toString) == oneBlock.map(_.toString),
+        "split reads must replay the single-block scan order")
+    }
+    assert(oneBlock.map(_.getAs[Long]("requests_total")).max > 8192, oneBlock)
+  }
+
+  test("faithful aggregate equals the collect_list reference over " +
+      "size-descending multi-file packing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_packing")
+    // ascending sizes in lexicographic order, so Spark's size-descending
+    // packing reads them in reverse
+    val parts = (0 until 6).map(f => jsonl(orderSensitive(200 * (f + 1), f), k => s"/p${k % 2}"))
+    for ((p, f) <- parts.zipWithIndex)
+      java.nio.file.Files.writeString(dir.resolve(f"part-$f%03d.jsonl"), p)
+    val one = java.nio.file.Files.createTempDirectory("graft_concat")
+    java.nio.file.Files.writeString(one.resolve("all.jsonl"), parts.mkString)
+    // the single-file concatenation is the reference's sequential read
+    val concat = Kpi.bitacoraKpi(Kpi.readBitacora(spark, one.toString)).collect()
+      .map(_.toString).toSeq
+    def read = Kpi.readBitacora(spark, dir.toString)
+    assert(assertMatchesReference(read).map(_.toString) == concat)
+    // all six files in ONE task, read largest (last) first
+    withConf("spark.sql.files.minPartitionNum" -> "1") {
+      assert(read.rdd.getNumPartitions == 1)
+      assert(assertMatchesReference(read).map(_.toString) == concat)
+    }
   }
 }
