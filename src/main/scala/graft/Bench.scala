@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
+import graft.cli.CliUtil
+
 /** Benchmark main: runs the headline queries (Queries.benchNames) on
   * SPARK_GRAFT_SF_DIR, forcing full materialization through the `noop` sink
   * (a bare .count() would let Catalyst prune most of the plan).
@@ -225,28 +227,11 @@ object Bench {
     // contract breaks (ADVICE r13). The bench is a standalone main, so
     // pin the default locale once instead of threading Locale.ROOT
     // through every format site.
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
+    CliUtil.pinLocale()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = CliUtil.cpus
     val cpusJson = Bench.cpusJson(cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // rank-filter pre-trim for corpus-scale quotas (see Verify.scala)
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", "16777216")
-      // Shuffle files are only deleted after their RDDs are GARBAGE
-      // COLLECTED (ContextCleaner), and a big-heap bench JVM can run a
-      // 157-query pass without a single full GC — Spark's 30min default
-      // periodicGC let the r18 sf10 run accumulate 63 GB of dead shuffle
-      // files and fill the disk. 120s bounds the backlog to a few
-      // queries' worth; the GC itself is off the timed path's critical
-      // sections (it runs in the cleaner thread between queries).
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "120s"))
-      .getOrCreate()
+    val spark = CliUtil.session("bench")
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_BENCH_ONLY=q120_link_prediction[,name...] restricts the
     // run to the named queries — a builder-side A/B probe that keeps the

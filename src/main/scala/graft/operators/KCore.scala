@@ -94,11 +94,12 @@ object KCore {
     // round is pinned AND re-rooted, so the SQL plan never nests across
     // rounds — the previous plan-identity warm probe kept full nesting
     // and its planning cost blew up superlinearly past ~10 rounds
-    // (KCoreDepthProbe: rounds=20 pinned a driver core for 30+ min of
-    // pure Catalyst work). A deep peel is a legitimate ask (a
-    // high-layering graph peels one layer per round), so the threshold
-    // parameters ride the memo key (`keyTag`) in place of plan identity;
-    // warm re-invocations return the memoized final. RDD lineage is kept
+    // (SCALE.md "Round 14 — k-core deep-rounds boundary": rounds=20
+    // pinned a driver core for 30+ min of pure Catalyst work). A deep
+    // peel is a legitimate ask (a high-layering graph peels one layer
+    // per round), so the threshold parameters ride the memo key
+    // (`keyTag`) in place of plan identity; warm re-invocations return
+    // the memoized final. RDD lineage is kept
     // (reRoot, not localCheckpoint) — eviction recomputes.
     LoopCache.untuned(LoopCache.memo(
       Seq("kcore-adj", LoopCache.planKey(a), rounds) ++ keyTag) {
@@ -151,9 +152,9 @@ object KCore {
     // DEEP-ROUNDS SAFE (round 16): each round pinned AND re-rooted, like
     // [[runAdj]] — the previous plan-identity probe kept full plan
     // nesting, whose Catalyst planning cost grows superlinearly past ~10
-    // rounds (KCoreDepthProbe, SCALE.md r14). The threshold parameters
-    // ride the memo key (`keyTag`) in place of plan identity; warm
-    // re-invocations return the memoized final.
+    // rounds (SCALE.md "Round 14 — k-core deep-rounds boundary"). The
+    // threshold parameters ride the memo key (`keyTag`) in place of plan
+    // identity; warm re-invocations return the memoized final.
     LoopCache.untuned(LoopCache.memo(
       Seq("kcore-edge", LoopCache.planKey(e), rounds) ++ keyTag) {
       e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -156,7 +156,8 @@ object PageRank {
     // DEEP-ROUNDS SAFE (round 15): iterations is caller-supplied, so like
     // BFS/k-core each round is pinned AND re-rooted — the SQL plan never
     // nests across rounds, killing the superlinear Catalyst planning cost
-    // the KCoreDepthProbe measured past ~10 rounds in this plan shape.
+    // measured past ~10 rounds in this plan shape (SCALE.md "Round 14 —
+    // k-core deep-rounds boundary").
     // Warm re-invocations return the memoized final (zero jobs); all
     // persists live INSIDE the memo build so a hit re-pins nothing.
     LoopCache.memo(Seq("pagerank", LoopCache.planKey(edges), srcCol, dstCol,
@@ -222,7 +223,8 @@ object PageRank {
       s"damping $dampNum/$dampDen must lie in [0, 1]")
     // DEEP-ROUNDS SAFE (round 16): caller-supplied round count, so each
     // round is pinned AND re-rooted like fixedPoint — the SQL plan never
-    // nests across rounds (the KCoreDepthProbe planning cliff); warm
+    // nests across rounds (the planning cliff in SCALE.md "Round 14 —
+    // k-core deep-rounds boundary"); warm
     // re-invocations return the memoized final. Same staleness contract
     // as every memoized operator: see the object scaladoc.
     LoopCache.memo(Seq("pagerankAdj", LoopCache.planKey(adj),

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.cli.CliUtil
 
 /** Executor-kill chaos gate (VERDICT r17 #2): run catalog queries on a
   * REAL 2-executor local-cluster, `kill -9` one executor JVM while the
@@ -38,38 +38,17 @@ object ChaosKillProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
+    CliUtil.pinLocale()
     val sfDir = args(0)
     val outJson = args(1)
     val names = args(2).split(",").map(_.trim).toSeq
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER",
-      "local-cluster[2,8,8192]")
+    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "")
     require(master.startsWith("local-cluster"),
-      s"chaos gate needs real executor JVMs, got master=$master")
-    require(sys.env.contains("SPARK_GRAFT_JARS"),
-      "SPARK_GRAFT_JARS=<packaged graft jar> required (sbt package)")
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", "16777216")
-      .config("spark.jars", sys.env("SPARK_GRAFT_JARS"))
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.executor.memory",
-        sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "8g"))
-      // default 4 task failures / 4 stage attempts tolerate one murder;
-      // what must NOT be raised is anything masking nondeterminism
-      .getOrCreate()
+      s"chaos gate needs real executor JVMs: set SPARK_GRAFT_MASTER=" +
+        s"local-cluster[...], got '$master'")
+    // default 4 task failures / 4 stage attempts tolerate one murder;
+    // what must NOT be raised is anything masking nondeterminism
+    val spark = CliUtil.session("chaos_kill")
     spark.sparkContext.setLogLevel("WARN")
     val qs = graft.Queries.registry.filter(q => names.contains(q.name))
     require(qs.map(_.name).toSet == names.toSet,

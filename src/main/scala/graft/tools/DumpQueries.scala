@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.Queries
-import org.apache.spark.sql.SparkSession
+import graft.cli.CliUtil
 
 /** Debug helper: dump the named queries' results to parquet so they can
   * be diffed against a local DuckDB oracle run without a full Verify
@@ -11,12 +11,7 @@ object DumpQueries {
     val sfDir  = args(0)
     val outDir = args(1)
     val names  = args.drop(2).toSeq
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = CliUtil.session("dump_queries")
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     names.foreach { n =>

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.cli.CliUtil
 
 /** Scratch stage-level profiler for the KPI-family hotspot (q01/q03/q04):
   * isolates scan, JSON extract, string round-trip, lenient casts, and the
@@ -10,13 +10,7 @@ import graft.Tables
 object KpiProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = CliUtil.session("kpi_profile")
     spark.sparkContext.setLogLevel("WARN")
 
     def time(label: String)(f: => Unit): Unit = {

@@ -5,6 +5,8 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
+import graft.cli.CliUtil
+
 /** Task-metrics envelope for one query execution: peak per-task execution
   * memory (the number that decides executor sizing — Spark's unified
   * memory manager grants execution memory per task slot), total shuffle
@@ -77,11 +79,7 @@ object MemEnvelope {
     val names =
       if (args.nonEmpty) args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
       else DefaultHeavy
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = CliUtil.session("mem_envelope")
     spark.sparkContext.setLogLevel("WARN")
     val byName = graft.Queries.registry.map(q => q.name -> q).toMap
     def mb(b: Long): String = f"${b / 1048576.0}%.1f"

@@ -1,17 +1,13 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Tables, QueriesText}
+import graft.cli.CliUtil
 import graft.operators.Dedup
 object ProfPrefix {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/scale10x")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = CliUtil.session("prof_prefix")
     spark.sparkContext.setLogLevel("WARN")
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f

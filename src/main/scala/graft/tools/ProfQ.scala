@@ -1,6 +1,6 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
+import graft.cli.CliUtil
 
 /** Scratch per-job profiler (not part of the driver contract): wall time
   * per job plus, per stage, task count and summed executor run time — so
@@ -9,11 +9,7 @@ import org.apache.spark.scheduler._
 object ProfQ {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val name = args(1)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = CliUtil.session("prof_q")
     spark.sparkContext.setLogLevel("WARN")
     val stageRun = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Int, String)]()
     spark.sparkContext.addSparkListener(new SparkListener {

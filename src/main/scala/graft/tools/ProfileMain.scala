@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.{Queries, Tables}
+import graft.cli.CliUtil
 import graft.operators.Dedup
 
 /** Scratch stage-level profiler for bench hotspots (not part of the driver
@@ -10,13 +10,7 @@ import graft.operators.Dedup
 object ProfileMain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = CliUtil.session("profile_main")
     spark.sparkContext.setLogLevel("WARN")
 
     def time[A](label: String)(f: => A): A = {

@@ -1,6 +1,6 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import graft.cli.CliUtil
 
 /** Throwaway component timer for cost attribution (not part of any
   * contract; contents change per investigation). Current (r18 opt):
@@ -15,12 +15,8 @@ object Scratch {
     val names =
       if (args.length > 2) args(2).split(",").map(_.trim).toSeq
       else Seq("q114_frequent_triples")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", "16777216")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = CliUtil.session("scratch")
+    spark.conf.set("spark.sql.shuffle.partitions", parts)
     spark.sparkContext.setLogLevel("WARN")
     // warm codegen on the tiny corpus first (bench protocol)
     names.foreach { n =>

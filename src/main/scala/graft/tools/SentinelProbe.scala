@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.cli.CliUtil
 
 /** Standalone sentinel-variance check: prints N timings of the Bench
   * sentinel at a given row count so the drift threshold can be set from
@@ -9,9 +9,7 @@ object SentinelProbe {
   def main(args: Array[String]): Unit = {
     val rows = if (args.nonEmpty) args(0).toLong else 10000000L
     val n = if (args.length > 1) args(1).toInt else 12
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = CliUtil.session("sentinel_probe")
     spark.sparkContext.setLogLevel("ERROR")
     val ts = (1 to n).map { _ =>
       val t0 = System.nanoTime()

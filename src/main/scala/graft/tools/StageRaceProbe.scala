@@ -2,8 +2,9 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.cli.CliUtil
 
 /** Cross-process staging race probe (VERDICT r17 #8): two of these
   * JVMs, pointed at ONE fresh SPARK_GRAFT_STAGE_DIR by
@@ -27,18 +28,13 @@ import org.apache.spark.sql.functions._
   */
 object StageRaceProbe {
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
+    CliUtil.pinLocale()
     val role = args(0)
     val peer = args(1)
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
     val root = Paths.get(sys.env.getOrElse("SPARK_GRAFT_STAGE_DIR",
       sys.error("SPARK_GRAFT_STAGE_DIR must point at the shared race root")))
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = CliUtil.session(s"stage_race_$role")
     spark.sparkContext.setLogLevel("ERROR")
 
     // rendezvous: announce readiness, then spin until the peer is ready

@@ -1,53 +1,26 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.Queries
+import graft.cli.CliUtil
 
 /** Scratch per-query timer (not part of the driver contract):
   * `sbt "runMain graft.tools.TimeQueries <sfDir> <name...>"` — warms each
   * query once, then reports the min of two timed noop-sink runs. */
 object TimeQueries {
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT) // JSON %.3f must be dot-decimal (ADVICE r13)
+    CliUtil.pinLocale() // JSON %.3f must be dot-decimal (ADVICE r13)
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else Queries.benchNames
     // SPARK_GRAFT_MASTER=local-cluster[2,16,16384] + SPARK_GRAFT_JARS
     // time the same queries across a REAL process boundary — the
-    // cluster-vs-local cost attribution probe (VERDICT r15 #6). Same
-    // executor bootstrap as Verify (JDK17 add-opens, memory slice).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]")
-    val b0 = {
-      val b = SparkSession.builder()
-        .master(master)
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-      sys.env.get("SPARK_GRAFT_JARS").foreach(b.config("spark.jars", _))
-      if (master.startsWith("local-cluster")) {
-        require(sys.env.contains("SPARK_GRAFT_JARS"),
-          "local-cluster master needs SPARK_GRAFT_JARS (sbt package)")
-        val addOpens = Seq(
-          "java.base/java.lang", "java.base/java.lang.invoke",
-          "java.base/java.lang.reflect", "java.base/java.io",
-          "java.base/java.net", "java.base/java.nio",
-          "java.base/java.util", "java.base/java.util.concurrent",
-          "java.base/java.util.concurrent.atomic",
-          "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-          "java.base/sun.security.action", "java.base/sun.util.calendar",
-        ).map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
-        b.config("spark.executor.extraJavaOptions", addOpens)
-          .config("spark.executor.memory",
-            sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "12g"))
-      } else b
-    }
+    // cluster-vs-local cost attribution probe (VERDICT r15 #6).
+    val spark = CliUtil.session("time_queries")
     // scratch-tool escape hatch: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2"
-    // layers experimental confs on top for A/B timing runs
-    val spark = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+    // layers experimental SQL confs on top for A/B timing runs
+    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
       .flatMap(_.split(";")).map(_.split("=", 2))
       .collect { case Array(k, v) => (k.trim, v.trim) }
-      .foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
+      .foreach { case (k, v) => spark.conf.set(k, v) }
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { n =>
       val fn = Queries.queries(n)

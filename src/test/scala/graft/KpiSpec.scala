@@ -12,14 +12,11 @@ object SparkTestSession {
     // idempotency spec (HttpSourceSpec) needs Spark's real at-least-once
     // task re-execution path. Tests that expect job failure still fail
     // (after one extra attempt); nothing else observes the difference.
+    // Everything but the master comes from the production factory's
+    // shared conf, so the specs run the conf every main runs.
     val s = SparkSession.builder()
       .master("local[4,2]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match the prod factories (Verify/Bench/Mains): rank-filter
-      // pre-trim must engage at corpus-scale quotas
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", "16777216")
+      .config(graft.cli.CliUtil.sharedConf("4"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -194,23 +191,23 @@ class KpiSpec extends AnyFunSuite {
     // order from (input_file_name, block_start, mono-id) because Spark's
     // size-descending split packing does NOT read files
     // lexicographically. Pin the contract with values whose float mean
-    // is ORDER-DEPENDENT: [1e16, 3, -1e16] sums to 4.0 sequentially
-    // (3 absorbs into 1e16's ulp as +4) but to 3.0 if the small file's
-    // row were summed first — so a wrong read order changes avg at the
-    // cent and the assert below catches it exactly.
+    // is ORDER-DEPENDENT: [3, 1e16, -1e16] sums to 4.0 sequentially
+    // (3 absorbs into 1e16's ulp as +4) but to 3.0 in packed order
+    // [1e16, -1e16, 3] — so a wrong read order changes avg at the cent
+    // and the assert below catches it exactly.
     def line(elapsed: String) =
       s"""{"timestamp_utc": "2026-08-11T00:00:00Z", "endpoint": "/get", """ +
         s""""status_code": 200, "elapsed_ms": $elapsed, "parse_result": "ok"}"""
     val two = java.nio.file.Files.createTempDirectory("graft_twofile")
-    // part-000: two rows (bigger file); part-001: one row (read FIRST by
-    // Spark's size-descending packing if the key didn't fix it)
+    // part-000: one row; part-001: two rows, the bigger file, so Spark's
+    // size-descending packing reads it FIRST — the key must reorder it
     java.nio.file.Files.writeString(two.resolve("part-000.jsonl"),
-      line("1.0e16") + "\n" + line("3.0") + "\n")
+      line("3.0") + "\n")
     java.nio.file.Files.writeString(two.resolve("part-001.jsonl"),
-      line("-1.0e16") + "\n")
+      line("1.0e16") + "\n" + line("-1.0e16") + "\n")
     val one = java.nio.file.Files.createTempDirectory("graft_onefile")
     java.nio.file.Files.writeString(one.resolve("all.jsonl"),
-      line("1.0e16") + "\n" + line("3.0") + "\n" + line("-1.0e16") + "\n")
+      line("3.0") + "\n" + line("1.0e16") + "\n" + line("-1.0e16") + "\n")
     val twoKpi = Kpi.bitacoraKpi(Kpi.readBitacora(spark, two.toString))
       .collect().map(_.toString).toSeq
     val oneKpi = Kpi.bitacoraKpi(Kpi.readBitacora(spark, one.toString))

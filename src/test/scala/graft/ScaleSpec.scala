@@ -809,7 +809,7 @@ class ScaleSpec extends AnyFunSuite {
   test("LSH mega-bucket cap: R-way dup groups below the cap yield full pair " +
     "sets; above it they are dropped — and exactDedup-first recovers them") {
     // The q44 growth pin (VERDICT r13 #7), semantics half. The measured
-    // half is graft.tools.BucketCensus + SCALE.md round 14: on the
+    // half is SCALE.md "Round 14 — LSH bucket-population census": on the
     // UNIFORM replica corpus kept-candidate pairs grow LINEARLY per
     // decade (3.6k→36k→365k at sf0.1→sf1→sf10, max bucket < 2^3), so
     // the next decade is predicted linear. On the SKEWED corpus 100-way
